@@ -169,6 +169,8 @@ def census(spark=None) -> dict:
       executor block-manager storage until clear_caches);
     - ``jvm_persistent_rdds``: the JVM CacheManager's live persistent-RDD
       count — the ground truth the persisted entries must bound;
+    - ``python_daemon_module``: the Python worker daemon in effect
+      (``spark.python.daemon.module``), so an artifact shows which ran;
     - ``driver_rss_mb``: this process's resident set (linux /proc).
     """
     out = {
@@ -179,6 +181,9 @@ def census(spark=None) -> dict:
         try:
             out["jvm_persistent_rdds"] = (
                 spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+            )
+            out["python_daemon_module"] = spark.sparkContext.getConf().get(
+                "spark.python.daemon.module", "pyspark.daemon"
             )
         except Exception:
             pass

@@ -328,15 +328,6 @@ def did_ethr_for(pub: _ec.EllipticCurvePublicKey, network: str = "sepolia") -> s
     return f"did:ethr:{network}:{addr}" if network else f"did:ethr:{addr}"
 
 
-def did_web_for(host: str, *path_segments: str) -> str:
-    """did:web identifier: host (port-encoded %3A per spec) plus optional
-    path segments joined with ':'."""
-    did = "did:web:" + host.replace(":", "%3A")
-    for seg in path_segments:
-        did += ":" + seg
-    return did
-
-
 def did_web_document_url(did: str) -> str:
     """W3C did:web resolution: the DID transforms to an HTTPS URL —
     bare host -> /.well-known/did.json, path form -> /<path>/did.json.

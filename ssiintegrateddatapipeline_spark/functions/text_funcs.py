@@ -112,18 +112,6 @@ def _simhash_from_hashes(hashes: Column) -> Column:
     return F.aggregate(bit_vals, F.lit(0).cast("long"), lambda acc, x: acc + x)
 
 
-def simhash32(toks: Column) -> Column:
-    """32-bit SimHash over token md5 hashes.
-
-    bit j of the result is 1 iff sum over tokens of (+1 if bit j of
-    md5_int32(token) else -1) is > 0. Entirely nested higher-order
-    functions — no explode, no shuffle. Prefer ``with_simhash32`` on a
-    DataFrame: it materializes the md5 array once instead of letting the
-    32 bit-aggregates each re-inline it.
-    """
-    return _simhash_from_hashes(F.transform(toks, md5_int32))
-
-
 def with_simhash32(df, toks: Column, out: str = "simhash"):
     """Two-projection SimHash: md5 per token computed exactly once, the 32
     bit-votes then aggregate over the materialized int array."""

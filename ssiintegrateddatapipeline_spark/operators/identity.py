@@ -130,15 +130,6 @@ def _sign_for(symbol: str, provider: str, claims: dict) -> str:
     return crypto.jwt_sign_es256k(claims, priv)
 
 
-def _verify_for(symbol: str, provider: str, token: str) -> bool:
-    from ssiintegrateddatapipeline_spark.functions import crypto
-
-    _, pub, _, alg = _executor_keys(symbol, provider)
-    if alg == "EdDSA":
-        return crypto.jwt_verify(token, pub)
-    return crypto.jwt_verify_es256k(token, pub)
-
-
 def build_identity_dim(
     spark: SparkSession, symbols=SYMBOLS, did_provider: str = "did:key"
 ) -> DataFrame:

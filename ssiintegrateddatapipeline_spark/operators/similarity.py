@@ -508,11 +508,6 @@ def _dots_for(emb_col, centroids) -> "F.Column":
     )
 
 
-def _centroid_dots(emb_col, dim: int) -> "F.Column":
-    """Dots against the SEED (pseudo-random) centroids."""
-    return _dots_for(emb_col, _centroid_literals(dim))
-
-
 # Trained codebook: the seed centroids are only the k-means initialization;
 # TRAIN_STEPS Lloyd iterations fit them to the corpus (assign -> per-cell
 # exact means, empty cells keep their previous value). Determinism comes
@@ -2063,17 +2058,6 @@ def _lsh_sig_sql(emb: str) -> str:
         )
         terms.append(f"(CASE WHEN {dot} > 0 THEN {1 << p} ELSE 0 END)")
     return " + ".join(terms)
-
-
-def _centroid_dots_sql(emb: str) -> str:
-    dots = ", ".join(
-        f"list_sum(list_transform(generate_series(1, len({emb})), "
-        f"i -> {emb}[i]::DOUBLE * "
-        f"((('0x' || substr(md5('c{k}|' || (i - 1)::VARCHAR), 1, 8))::UBIGINT::BIGINT"
-        f" / 2147483648.0) - 1.0)))"
-        for k in range(N_CENTROIDS)
-    )
-    return f"[{dots}]"
 
 
 _DIM_SQL = "(SELECT len(embedding) FROM embeddings LIMIT 1)"

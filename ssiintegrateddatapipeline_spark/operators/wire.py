@@ -597,23 +597,6 @@ def proto_serialize(df: DataFrame) -> DataFrame:
     return df.mapInPandas(enc, "key string, value binary")
 
 
-def proto_deserialize(df: DataFrame) -> DataFrame:
-    """(key, value) -> decoded envelope columns (spec-general tag walk)."""
-    from ssiintegrateddatapipeline_spark.functions import proto_codec
-
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = [proto_codec.decode_trade(v) for v in pdf["value"]]
-            yield pd.DataFrame.from_records(recs, columns=_FIELDS)
-
-    schema = (
-        "trade_event_id string, symbol string, price double, volume double,"
-        " trade_condition array<string>, event_ts_us long, start_ts_us long,"
-        " e2e_latency_secs double"
-    )
-    return df.mapInPandas(dec, schema)
-
-
 def proto_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Protobuf twin of `wire_avro_roundtrip`: encode every envelope row to
     proto wire bytes, decode, restore timestamps — output equals the

@@ -2250,7 +2250,7 @@ def streaming_store_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         # per version) and the sink append would otherwise each re-run
         # the batch's file-pair diff from scratch (§5 — cache only what
         # is reused; measured ~2x the per-batch cost without it)
-        bdf.persist()
+        bdf = bdf.persist()
         try:
             vs = [
                 r[0]
